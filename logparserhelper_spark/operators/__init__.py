@@ -7,8 +7,3 @@ from logparserhelper_spark.operators.extract import (  # noqa: F401
 )
 from logparserhelper_spark.operators.normalize import make_normalize_udf, normalize_text  # noqa: F401
 from logparserhelper_spark.operators.enrich import bank_dim, enrich  # noqa: F401
-from logparserhelper_spark.operators.route import route  # noqa: F401
-from logparserhelper_spark.operators.aggregate import (  # noqa: F401
-    conv_rollup,
-    sink_pattern_freq,
-)

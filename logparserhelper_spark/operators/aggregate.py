@@ -6,12 +6,12 @@ All are stock partial+final hash aggregations — the shuffle carries only
 (group key, partial count) pairs.
 
 Skew: per-conversation rollups must survive a single conversation with 10^6+
-turns. ``conv_rollup`` therefore aggregates in two levels — a salted partial
-(conv_id, salt=pmod(hash(turn_idx), k)) followed by the conv-level final —
-so the hot key is spread over k reducers before the (tiny) final merge.
-Spark's map-side partial aggregation already defuses most count-only skew;
-the explicit salt guards the case where one conversation dominates whole
-partitions (SURVEY.md §7 hard-part #4).
+turns. ``conv_rollup_from_turns`` therefore aggregates in two levels — a
+salted partial (conv_id, salt=pmod(hash(turn_idx), k)) followed by the
+conv-level final — so the hot key is spread over k reducers before the
+(tiny) final merge. Spark's map-side partial aggregation already defuses
+most count-only skew; the explicit salt guards the case where one
+conversation dominates whole partitions (SURVEY.md §7 hard-part #4).
 """
 
 from __future__ import annotations
@@ -22,71 +22,11 @@ from pyspark.sql import functions as F
 DEFAULT_SALT = 16
 
 
-def sink_pattern_freq(routed: DataFrame) -> DataFrame:
-    """Per-sink pattern frequency: one row per (sink, pattern_id,
-    pattern_name), n_matches = span count (NOT matched-turn count: a turn can
-    contain several matches — the Linux 710-over-454 golden), n_turns =
-    distinct matched turns. unmatched sink counts its turns."""
-    return (
-        routed.groupBy("sink", "pattern_id", "pattern_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.count_distinct("conv_id", "turn_idx").alias("n_turns"),
-        )
-    )
-
-
-def conv_rollup(turns: DataFrame, salt: int = DEFAULT_SALT) -> DataFrame:
-    """Per-conversation turn counts over deduped turns:
-    (conv_id, n_turns, max_turn_idx, first_ts, last_ts).
-
-    Two-level salted aggregation: partials per (conv_id, salt) then final per
-    conv_id. All partial aggregates used are re-mergeable (sum/max/min)."""
-    salted = turns.withColumn(
-        "_salt", F.pmod(F.xxhash64("turn_idx"), F.lit(salt)).cast("int")
-    )
-    partial = salted.groupBy("conv_id", "_salt").agg(
-        F.count(F.lit(1)).alias("pn"),
-        F.max("turn_idx").alias("pmax"),
-        F.min("ts").alias("pfirst"),
-        F.max("ts").alias("plast"),
-    )
-    return (
-        partial.groupBy("conv_id")
-        .agg(
-            F.sum("pn").alias("n_turns"),
-            F.max("pmax").alias("max_turn_idx"),
-            F.min("pfirst").alias("first_ts"),
-            F.max("plast").alias("last_ts"),
-        )
-    )
-
-
-def conv_match_rollup(routed: DataFrame, salt: int = DEFAULT_SALT) -> DataFrame:
-    """Per-conversation match rollup over routed span rows: total spans and
-    matched-turn count, salted like conv_rollup (span rows inherit — and
-    amplify — conversation skew)."""
-    salted = routed.withColumn(
-        "_salt", F.pmod(F.xxhash64("turn_idx"), F.lit(salt)).cast("int")
-    )
-    partial = salted.groupBy("conv_id", "_salt").agg(
-        F.sum(F.when(F.col("pattern_id").isNotNull(), 1).otherwise(0)).alias("pspans"),
-        F.count_distinct(
-            F.when(F.col("pattern_id").isNotNull(), F.col("turn_idx"))
-        ).alias("pmturns"),
-    )
-    return partial.groupBy("conv_id").agg(
-        F.sum("pspans").alias("n_spans"),
-        # distinct turn_idx sets are disjoint across salts (salt = f(turn_idx))
-        F.sum("pmturns").alias("n_matched_turns"),
-    )
-
-
 def conv_rollup_from_turns(turns: DataFrame, salt: int = DEFAULT_SALT) -> DataFrame:
     """Per-conversation rollup straight from the per-turn sink (one row per
     turn, ``n_spans`` column) — no span fan-out, no DISTINCT: strictly
     cheaper than deriving the same numbers from routed span rows. Salted
-    two-level aggregation as in conv_rollup."""
+    two-level aggregation (module docstring)."""
     salted = turns.withColumn(
         "_salt", F.pmod(F.xxhash64("turn_idx"), F.lit(salt)).cast("int")
     )

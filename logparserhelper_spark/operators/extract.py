@@ -14,9 +14,10 @@ cheap alternation prefilter for the no-match common case):
   stays in Python ``re`` deliberately: Spark SQL's ``regexp_extract_all`` is
   the Java dialect, and oracle equality demands Python semantics
   (SURVEY.md §4.3).
-- ``parse_and_explode``: the hot path — the scalar spans UDF followed by a
-  JVM-side ``explode_outer`` (one output row per span, one null-span row per
-  unmatched turn). Crucially only the TEXT column crosses the JVM<->Python
+- ``parse_and_explode``: the scalar spans UDF followed by a JVM-side
+  ``explode_outer`` (one output row per span, one null-span row per
+  unmatched turn) — the per-span-row shape the document-level contract
+  queries use. Crucially only the TEXT column crosses the JVM<->Python
   boundary; every other payload column stays in Tungsten rows. An earlier
   ``mapInPandas`` formulation that round-tripped all columns through Arrow
   measured ~3x slower at 3.4M turns — the regex was never the bottleneck,
@@ -325,20 +326,3 @@ def normalize_batch_with_span_knowledge(texts, span_lists, spec, ct):
             out.append(t)
     return out
 
-
-def parse_normalize_explode(
-    df: DataFrame,
-    bank: PatternBank,
-    tbank: TransformBank | None,
-    text_col: str = "text",
-) -> DataFrame:
-    """Pipeline hot path: fused normalize+extract UDF, then JVM-side
-    explode_outer. Output = input columns + norm_text + span fields."""
-    udf = make_parse_normalize_udf(bank, tbank)
-    out = df.withColumn("_pn", udf(F.col(text_col)))
-    out = out.select(
-        *[c for c in df.columns],
-        F.col("_pn.norm_text").alias("norm_text"),
-        F.col("_pn.spans").alias("_spans"),
-    )
-    return _explode_spans(out)

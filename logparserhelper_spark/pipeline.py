@@ -3,8 +3,10 @@ bucket-level checkpoint/resume, lineage, and observed metrics.
 
 Lifecycle (Spark rebuild of the reference's E1 path, SURVEY.md §3):
 
-  read transcripts -> stable-order dedup -> normalize (O7 chain)
-    -> fused span extraction (O4, one mapInPandas pass)
+  read transcripts -> stable-order dedup
+    -> fused normalize + span extraction (O7 + O4: one scalar Arrow
+       pandas UDF, so only the text column crosses to Python — a
+       mapInPandas pass measured ~3x slower, operators/extract.py)
     -> enrich (broadcast role/tool/bank dims)
     -> multicast route -> per-sink partitioned write
     -> aggregates (per-sink pattern frequency, per-conversation rollups)
@@ -18,9 +20,9 @@ Scale/resume design:
   (bank version, input), mirroring the reference's idempotent full recompute
   (core/regex_highlighter.py:10) — re-running a bucket overwrites it
   byte-equivalently. On Iceberg this maps to REPLACE-partition commits.
-- Aggregates are computed per bucket from the *written* routed output with a
-  column-pruned read-back (parse runs exactly once per turn; hard-part #2 of
-  SURVEY.md §7 — no persist + per-sink action fan-out).
+- Routing and aggregates are computed per bucket from the *written* per-turn
+  output with a column-pruned read-back (parse runs exactly once per turn;
+  hard-part #2 of SURVEY.md §7 — no persist + per-sink action fan-out).
 - Lineage is embedded provenance: every routed row carries the source
   partition id and bank version; the lineage table is a groupBy over the
   pruned read-back, and conservation (sum(rows_in) == input turns) is tested.
@@ -61,8 +63,6 @@ class PipelineConfig:
     role_dim_path: str | None = None
     tool_dim_path: str | None = None
     n_buckets: int = 4
-    dedup_strategy: str = "agg"
-    salt: int = 16
     # partitions for the parse stage. The input is explicitly repartitioned
     # to this count on (conv_id, turn_idx) BEFORE dedup; the dedup groupBy's
     # clustering requirement is satisfied by that exchange, so dedup + the
@@ -74,9 +74,7 @@ class PipelineConfig:
     # CPU-bound stage by shuffle BYTES and collapse small-but-expensive
     # inputs into one task (a 60k-turn hot conversation measured 1 task
     # under byte-sized coalescing; (conv_id, turn_idx) hashing spreads it).
-    # None -> 2x defaultParallelism; 0 -> no explicit repartition (let the
-    # dedup exchange + AQE size it — right when the source is already
-    # bucket-partitioned, e.g. a conv_id-bucketed Iceberg scan).
+    # None -> 2x defaultParallelism (resolved by _parse_partitions).
     parse_partitions: int | None = None
     # routed-sink format: "parquet" (directory per bucket, the default) or
     # "table" — the snapshot-table shim (sinks/hadoop_table.py): ONE
@@ -86,18 +84,36 @@ class PipelineConfig:
     # per snapshot, and a writer death mid-bucket leaves the table at its
     # previous snapshot (commit-or-nothing) instead of a half-written dir.
     routed_format: str = "parquet"
-    # opt-in JVM rlike prefilter for the parse stage: definitely-miss
-    # turns (per a provable Java superset of the bank's patterns —
-    # operators/prefilter.py) bypass the Python crossing. Output is
-    # bit-equal either way; the flag exists because the win depends on
-    # the corpus miss rate and the plan gains a branch-union.
-    parse_prefilter: bool = False
     # test hook: raise after committing this many buckets (resume test)
     fail_after_buckets: int | None = None
 
 
 class InjectedFailure(RuntimeError):
     pass
+
+
+def _check_config(cfg: PipelineConfig) -> None:
+    """Reject a malformed config before it can touch out_dir: a typo'd
+    setting would otherwise change the run fingerprint and wipe every
+    committed bucket before failing (or, for routed_format, silently fall
+    back to parquet)."""
+    if cfg.routed_format not in ("parquet", "table"):
+        raise ValueError(
+            f"routed_format must be 'parquet' or 'table', got {cfg.routed_format!r}"
+        )
+    if cfg.n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {cfg.n_buckets!r}")
+    if cfg.parse_partitions is not None and cfg.parse_partitions < 1:
+        raise ValueError(
+            f"parse_partitions must be None or >= 1, got {cfg.parse_partitions!r}"
+        )
+
+
+def _parse_partitions(spark: SparkSession, cfg: PipelineConfig) -> int:
+    """The resolved parse-stage partition count (PipelineConfig.parse_partitions)."""
+    if cfg.parse_partitions is not None:
+        return cfg.parse_partitions
+    return spark.sparkContext.defaultParallelism * 2
 
 
 def _progress_dir(cfg: PipelineConfig) -> str:
@@ -109,8 +125,8 @@ def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> di
     when ALL of it matches — otherwise merged outputs would mix versions,
     breaking the 'outputs are pure functions of (bank version, input)'
     invariant. ``effective_parse_partitions`` is the RESOLVED parse
-    partition count (cfg.parse_partitions or the session default x2):
-    committed turns embed src_partition_id, which depends on it, so a
+    partition count (_parse_partitions): committed turns embed
+    src_partition_id, which depends on it, so a
     resume under a different parallelism must invalidate rather than mix
     provenance spaces across buckets."""
     import hashlib
@@ -121,11 +137,8 @@ def _run_fingerprint(cfg: PipelineConfig, effective_parse_partitions: int) -> di
         "transform_hash": hashlib.sha256(json.dumps(tspec).encode()).hexdigest()[:16],
         "n_buckets": cfg.n_buckets,
         "input_path": os.path.abspath(cfg.input_path),
-        "dedup_strategy": cfg.dedup_strategy,
-        "salt": cfg.salt,
         "parse_partitions": effective_parse_partitions,
         "routed_format": cfg.routed_format,
-        "parse_prefilter": cfg.parse_prefilter,
     }
 
 
@@ -178,6 +191,7 @@ def _mark_bucket(cfg: PipelineConfig, k: int, payload: dict) -> None:
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
+    _check_config(cfg)
     t0 = time.monotonic()
     bank = cfg.pattern_bank
     tbank = cfg.transform_bank
@@ -186,12 +200,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     tool_dim = read_dim(spark, cfg.tool_dim_path) if cfg.tool_dim_path else None
 
     src = read_transcripts(spark, cfg.input_path)
-    effective_parse = (
-        cfg.parse_partitions
-        if cfg.parse_partitions is not None
-        else spark.sparkContext.defaultParallelism * 2
-    )
-    _validate_or_reset_progress(cfg, effective_parse)
+    _validate_or_reset_progress(cfg, _parse_partitions(spark, cfg))
     committed = _committed_buckets(cfg)
     metrics: dict = {"buckets": {}, "bank_version": bank.version}
 
@@ -230,16 +239,12 @@ def build_turns_plan(
     (conv_id, turn_idx) exchange feeding dedup -> fused parse/normalize ->
     enrich. Shared by _run_bucket and scripts/plan_snapshots.py so plan
     drift (a lost fusion, an extra shuffle) fails the snapshot check."""
-    n_parse = (
-        cfg.parse_partitions
-        if cfg.parse_partitions is not None
-        else spark.sparkContext.defaultParallelism * 2
+    # pre-dedup: the dedup groupBy reuses this exchange (its clustering
+    # requirement is exactly these keys), so no second shuffle follows
+    bucket_src = bucket_src.repartition(
+        _parse_partitions(spark, cfg), "conv_id", "turn_idx"
     )
-    if n_parse > 0:
-        # pre-dedup: the dedup groupBy reuses this exchange (its clustering
-        # requirement is exactly these keys), so no second shuffle follows
-        bucket_src = bucket_src.repartition(n_parse, "conv_id", "turn_idx")
-    turns = stable_order_dedup(bucket_src, strategy=cfg.dedup_strategy)
+    turns = stable_order_dedup(bucket_src)
     # provenance: the physical partition each turn was parsed in
     turns = turns.withColumn("src_partition_id", F.spark_partition_id())
     # fused O7 normalize + O4 extract: ONE Python crossing per turn. The
@@ -249,32 +254,7 @@ def build_turns_plan(
     # fan-out ever duplicates text bytes (the earlier per-span-row layout
     # measured ~40% slower end-to-end at 3.4M turns).
     pn = make_parse_normalize_udf(bank, tbank)
-    pre = None
-    if cfg.parse_prefilter:
-        from logparserhelper_spark.operators.extract import SPAN_ARRAY_TYPE
-        from logparserhelper_spark.operators.prefilter import bank_prefilter_regex
-
-        pre = bank_prefilter_regex(bank, tbank)
-    if pre is not None:
-        # JVM rlike prefilter (operators/prefilter.py): the regex is a
-        # provable SUPERSET of "any pattern/transform fires", so rows it
-        # rejects are bit-equal to the UDF's identity output and skip the
-        # Arrow crossing + Python re entirely — the win is proportional to
-        # the corpus miss rate (4 of 6 reference corpora are all-miss).
-        # Both branches filter the SAME exchange output (ReusedExchange),
-        # so the source is still scanned/shuffled once.
-        hit_cond = F.col("text").isNotNull() & F.col("text").rlike(pre)
-        hits = turns.filter(hit_cond).withColumn("_pn", pn(F.col("text")))
-        misses = turns.filter(~F.coalesce(hit_cond, F.lit(False))).withColumn(
-            "_pn",
-            F.struct(
-                F.col("text").alias("norm_text"),
-                F.array().cast(SPAN_ARRAY_TYPE).alias("spans"),
-            ),
-        )
-        turns = hits.unionByName(misses)
-    else:
-        turns = turns.withColumn("_pn", pn(F.col("text")))
+    turns = turns.withColumn("_pn", pn(F.col("text")))
     turns = turns.select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts",
         "src_partition_id",
@@ -299,7 +279,12 @@ def build_turns_plan(
 
 def build_routed_plan(back: DataFrame, bdim: DataFrame) -> DataFrame:
     """Multicast routing subtree over the turns read-back: explode spans
-    (null row for unmatched), broadcast bank-dim join — shuffle-free."""
+    (null row for unmatched), broadcast bank-dim join — shuffle-free.
+
+    Routing is multicast because the reference tags a char range once per
+    matching bank entry (core/regex_highlighter.py:16-25): a turn matching
+    k entries lands in all k sinks, duplicate patterns double-route, and
+    ``unmatched`` — the common case in log corpora — is a first-class sink."""
     dim = bdim.select("pattern_id", "pattern_name", "sink", "color")
     return (
         back.select(
@@ -438,7 +423,7 @@ def _run_bucket(
         lambda: sink_pattern_freq_from_turns(back, bdim)
         .write.mode("overwrite")
         .parquet(os.path.join(partial_dir, "sink_pattern_freq", f"bucket={k}")),
-        lambda: conv_rollup_from_turns(back, salt=cfg.salt)
+        lambda: conv_rollup_from_turns(back)
         .write.mode("overwrite")
         .parquet(os.path.join(partial_dir, "conv_rollup", f"bucket={k}")),
         lambda: lineage.write.mode("overwrite").parquet(lineage_dir),

@@ -20,6 +20,12 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Python UDF workers inherit PYTHONPATH, not the driver's sys.path: without
+# the repo on it, every worker fails to import logparserhelper_spark when the
+# script runs from outside the repo
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    dict.fromkeys([REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
+)
 
 SF_DIR = "/root/testdata/sf0.01"
 PLANS_DIR = os.path.join(REPO, "BENCH", "plans")

@@ -8,13 +8,16 @@ Asserts, on the deterministic tiny transcripts table:
 - dedup strategy equivalence (agg == window),
 - enrich null-preservation,
 - resume: injected failure + restart == one-shot run,
+- a malformed config raises before it can invalidate committed buckets,
 - reference corpora as transcripts reproduce the golden matrix.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -29,6 +32,8 @@ from logparserhelper_spark.operators.ordering import stable_order_dedup
 from logparserhelper_spark.pipeline import (
     InjectedFailure,
     PipelineConfig,
+    _parse_partitions,
+    _run_fingerprint,
     reset_output,
     run_pipeline,
 )
@@ -265,6 +270,46 @@ def test_resume_invalidated_on_config_change(spark, tiny_dir, tmp_path):
     m3 = run_pipeline(spark, cfg_n)
     assert not any(v == "resumed" for v in m3["buckets"].values())
     assert len(m3["buckets"]) == 3
+
+    # a manifest from before three options left PipelineConfig holds their
+    # keys too (same settings otherwise) -> recompute, never resume
+    manifest = os.path.join(out, "_progress", "manifest.json")
+    fp = _run_fingerprint(cfg_n, _parse_partitions(spark, cfg_n))
+    with open(manifest) as f:
+        assert json.load(f) == fp
+    with open(manifest, "w") as f:
+        json.dump(dict(fp, dedup_strategy="agg", salt=16, parse_prefilter=False), f)
+    m_old = run_pipeline(spark, cfg_n)
+    assert not any(v == "resumed" for v in m_old["buckets"].values())
+    assert len(m_old["buckets"]) == 3
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [{"routed_format": "iceberg"}, {"n_buckets": 0}, {"parse_partitions": 0}],
+)
+def test_invalid_config_rejected_before_touching_out_dir(
+    spark, tiny_dir, tiny_out, tmp_path, bad
+):
+    """A typo'd config on a completed out_dir must raise before the progress
+    check, which would otherwise see a new fingerprint and wipe every
+    committed bucket."""
+    out = str(tmp_path / "done")
+    shutil.copytree(tiny_out[0], out)
+    progress = tmp_path / "done" / "_progress"
+
+    def snapshot():
+        return {p.name: p.read_bytes() for p in progress.iterdir()}
+
+    before = snapshot()
+    assert "manifest.json" in before and "bucket_0.json" in before
+    cfg = PipelineConfig(
+        input_path=tiny_dir, out_dir=out, transform_bank=TBANK, n_buckets=3
+    )
+    with pytest.raises(ValueError):
+        run_pipeline(spark, dataclasses.replace(cfg, **bad))
+    assert snapshot() == before
+    assert os.path.isdir(os.path.join(out, "routed", "bucket=0"))
 
 
 def test_iceberg_writer_builder_carries_partition_spec(spark, tiny_dir):
